@@ -720,18 +720,25 @@ def build_blocks(
 # --------------------------------------------------------------------------
 
 
-def compute_index_stats(store: IndexStore, spark: SparkSession) -> dict:
-    """IndexStats (B6 — inverted_index.cpp:158-204 parity):
-    avg_document_length averages unique_terms; most_frequent_term by df
-    with deterministic (df, term) tie-break."""
-    docmeta = store.read_stage(spark, "docmeta")
-    dictionary = store.read_stage(spark, "dictionary")
-    d = docmeta.agg(
+def docmeta_totals(docmeta: DataFrame):
+    """One job: doc count ``n``, ``avgdl``, ``avg_unique`` and
+    ``total_tokens`` of the docmeta stage — the BM25 corpus constants
+    and the doc half of the index stats."""
+    return docmeta.agg(
         F.count("*").alias("n"),
         F.avg("unique_terms").alias("avg_unique"),
         F.avg("doc_len").alias("avgdl"),
         F.sum("doc_len").alias("total_tokens"),
     ).collect()[0]
+
+
+def compute_index_stats(store: IndexStore, spark: SparkSession,
+                        totals) -> dict:
+    """IndexStats (B6 — inverted_index.cpp:158-204 parity):
+    avg_document_length averages unique_terms; most_frequent_term by df
+    with deterministic (df, term) tie-break. ``totals`` is the build's
+    ``docmeta_totals`` row."""
+    dictionary = store.read_stage(spark, "dictionary")
     t = dictionary.agg(
         F.count("*").alias("terms"),
         F.sum("df").alias("postings"),
@@ -740,12 +747,12 @@ def compute_index_stats(store: IndexStore, spark: SparkSession) -> dict:
     n_terms = t["terms"] or 0
     n_postings = int(t["postings"] or 0)
     return {
-        "total_documents": int(d["n"]),
+        "total_documents": int(totals["n"]),
         "total_terms": int(n_terms),
         "total_postings": n_postings,
-        "total_tokens": int(d["total_tokens"] or 0),
-        "avg_document_length": float(d["avg_unique"] or 0.0),
-        "avgdl_tokens": float(d["avgdl"] or 0.0),
+        "total_tokens": int(totals["total_tokens"] or 0),
+        "avg_document_length": float(totals["avg_unique"] or 0.0),
+        "avgdl_tokens": float(totals["avgdl"] or 0.0),
         "avg_term_frequency": (n_postings / n_terms) if n_terms else 0.0,
         "most_frequent_term": t["most"]["term"] if t["most"] else None,
     }
@@ -791,10 +798,8 @@ def build_index(
         timings["dictionary_s"] = round(time.time() - t0, 3)
     dictionary = store.read_stage(spark, "dictionary")
 
-    agg = docmeta.agg(
-        F.count("*").alias("n"), F.avg("doc_len").alias("avgdl")
-    ).collect()[0]
-    n_docs, avgdl = int(agg["n"]), float(agg["avgdl"] or 0.0)
+    totals = docmeta_totals(docmeta)
+    n_docs, avgdl = int(totals["n"]), float(totals["avgdl"] or 0.0)
 
     if not (resume and store.stage_complete("blocks")):
         t0 = time.time()
@@ -803,7 +808,7 @@ def build_index(
         )
         timings["blocks_s"] = round(time.time() - t0, 3)
 
-    stats = compute_index_stats(store, spark)
+    stats = compute_index_stats(store, spark, totals)
     store.write_meta(
         {
             "config": cfg.to_dict(),

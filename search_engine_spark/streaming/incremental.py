@@ -473,6 +473,11 @@ class IncrementalIndexer:
         ``_phrase_candidates`` compiles — no Python in the hot path."""
         from functools import reduce as _reduce
 
+        from search_engine_spark.operators.query_eval import (
+            local_frame,
+            phrase_ordinal_candidates,
+        )
+
         if "positions" not in postings.columns:
             raise RuntimeError(
                 "phrase/proximity queries need token ordinals — rebuild "
@@ -482,7 +487,7 @@ class IncrementalIndexer:
         if not terms:
             # whitespace-only quoted phrase → Phrase(()) — matches
             # nothing (same guard as the batch Phrase branch)
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return local_frame(self.spark, "doc_id long, score double")
 
         def term_hits(t: str) -> DataFrame:
             hits = postings
@@ -492,10 +497,6 @@ class IncrementalIndexer:
                     == _term_bucket_py(t, self.postings_buckets)
                 )
             return hits.filter(F.col("term") == t)
-
-        from search_engine_spark.operators.query_eval import (
-            phrase_ordinal_candidates,
-        )
 
         parts = [
             term_hits(t).select("doc_id", F.col("positions").alias(f"p{i}"))
@@ -526,11 +527,12 @@ class IncrementalIndexer:
         member terms, ties doc_id asc) evaluated relationally on the
         long-form postings. Each term leaf is a bucket+term-pruned
         scan; NOT anti-joins the segment docmeta."""
+        from search_engine_spark.operators.query_eval import local_frame
         from search_engine_spark.plans import query_parser as qp
 
         ast = qp.parse(query)
         if ast is None:
-            return self.spark.createDataFrame([], "doc_id long, score double")
+            return local_frame(self.spark, "doc_id long, score double")
         n, avgdl = self._corpus_stats()
         postings = self.postings()
 

@@ -51,14 +51,48 @@ def test_hit_enrichment_pushes_docid_in_filter(spark, tmp_path):
         eng._last_enrich_scan._jdf.queryExecution().executedPlan().toString()
     )
     assert "PushedFilters: [In(doc_id" in scan_plan, scan_plan
-    # ... and the returned frame is a pure local relation: no scan,
-    # join, or exchange of a corpus-sized table anywhere in its plan
+    # ... and the returned frame is a pure local relation (built from an
+    # Arrow table, not a Python RDD): no scan, join, or exchange of a
+    # corpus-sized table anywhere in its plan
     plan = hits._jdf.queryExecution().executedPlan().toString()
-    assert "LocalTableScan" in plan or "Scan ExistingRDD" in plan
+    assert "LocalTableScan" in plan and "Scan ExistingRDD" not in plan, plan
     assert "Parquet" not in plan and "BroadcastExchange" not in plan
     assert hits.count() == 5
     row = hits.first()
     assert row["url"] is not None and row["title"] is not None
+
+
+def test_search_plans_run_one_python_decode(spark, tmp_path):
+    """Each of the benchmark's seven query shapes compiles to a scores
+    plan with exactly one Python stage (the multi-term block decode) and
+    no Python-RDD scan, on the pruned routes (small blocks) and the
+    unpruned one alike."""
+    from search_engine_spark.sources.pages_source import REFERENCE_QUERY_TERMS
+
+    a, b, c, d = REFERENCE_QUERY_TERMS
+    pages = pages_df(spark, n_docs=120, seed=5)
+    cfgs = (
+        EngineConfig(index_partitions=4, block_size=4, wand_min_blocks=2),
+        EngineConfig(index_partitions=4),
+    )
+    shapes = {
+        "term": (a, None),
+        "and": (f"{a} && {b}", None),
+        "or": (f"{a} || {b}", None),
+        "not": (f"{a} && !{b}", None),
+        "tree": (f"({a} && {b}) || ({c} && !{d})", None),
+        "phrase": (f'"{a} {b}"', None),
+        "filter": (f"{a} || {b}", F.col("doc_len") <= 300),
+    }
+    for i, cfg in enumerate(cfgs):
+        out = str(tmp_path / f"idx{i}")
+        build_index(spark, pages, out, cfg)
+        eng = SearchEngine(spark, out)
+        for shape, (q, flt) in shapes.items():
+            scores = eng.search(q, 10, with_meta=False, meta_filter=flt)
+            plan = scores._jdf.queryExecution().executedPlan().toString()
+            assert plan.count("MapInPandas") == 1, (shape, plan)
+            assert "Scan ExistingRDD" not in plan, (shape, plan)
 
 
 def test_meta_filtered_search_pushes_predicate(spark, tmp_path):
